@@ -100,12 +100,6 @@ class Node:
                 return v
         return None
 
-    def iter_children(self):
-        c = self.first_child
-        while c is not None:
-            yield c
-            c = c.next_sibling
-
     def __repr__(self):  # pragma: no cover - debug aid
         kind = {DOCUMENT: "doc", ELEMENT: "elem", TEXT: "text", COMMENT: "comment"}[self.type]
         return f"<Node {kind} {self.data[:30]!r}>"
@@ -214,16 +208,6 @@ class _TreeBuilder(HTMLParser):
             if k not in seen:
                 node.attrs.append((k, v))
                 seen.add(k)
-
-    def _current_parent(self) -> Node:
-        if self.stack:
-            return self.stack[-1]
-        if self.body_started:
-            return self._ensure_body()
-        if self.head_explicit_open:
-            return self._ensure_head()
-        # head-limbo: decided per token type by callers
-        return self._ensure_body()
 
     # -- implied end tags --------------------------------------------------
     def _close_p_in_button_scope(self):

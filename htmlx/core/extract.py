@@ -28,12 +28,7 @@ from .scorer import DefaultScorer, get_default_scorer, score_all_nodes, select_b
 from .tables import TrackedBuilder
 from .textnorm import clean_text, get_text_content
 from .urlutil import is_external_url, is_valid_url
-from .media import (
-    extract_audios,
-    extract_videos,
-    extract_videos_and_audios,
-    has_media_reference,
-)
+from .media import extract_videos_and_audios, has_media_reference
 
 # config.go:11-26, 50-54, 72
 DEFAULT_MAX_INPUT_SIZE = 50 * 1024 * 1024
@@ -249,44 +244,38 @@ class Extractor:
 
     def _extract_from_document(self, doc: Node, html_content: str) -> Result:
         """Port of extractFromDocument (extract.go:732-800)."""
+        cfg = self.config
         result = Result()
         result.title = self._extract_title(doc)
 
         content_node = doc
-        if self.config.extract_article:
+        if cfg.extract_article:
             article = self._extract_article_node(doc)
             if article is not None:
                 content_node = article
         content_node = clean_content_node(content_node)
 
-        image_format = self.config.inline_image_format
-        link_format = self.config.inline_link_format
-
-        if image_format != "none" or link_format != "none":
+        # [IMAGE:n]/[LINK:n] placeholders are rendered only for an inline
+        # format, which then rewrites them from the image/link lists
+        inline = cfg.inline_image_format != "none" or cfg.inline_link_format != "none"
+        raw = extract_text_with_structure_and_images(
+            content_node, [0, 0] if inline else None, cfg.table_format
+        )
+        result.text = clean_text(raw)
+        if inline or cfg.preserve_images or cfg.preserve_links:
             images, links = self._extract_images_and_links(content_node)
-            if self.config.preserve_images:
+            if inline:
+                text = self._format_inline_images(result.text, images, cfg.inline_image_format)
+                result.text = self._format_inline_links(text, links, cfg.inline_link_format)
+            if cfg.preserve_images:
                 result.images = images
-            if self.config.preserve_links:
+            if cfg.preserve_links:
                 result.links = links
-            counters = [0, 0]
-            raw = extract_text_with_structure_and_images(content_node, counters, self.config.table_format)
-            text = clean_text(raw)
-            text = self._format_inline_images(text, images, image_format)
-            result.text = self._format_inline_links(text, links, link_format)
-        else:
-            raw = extract_text_with_structure_and_images(content_node, None, self.config.table_format)
-            result.text = clean_text(raw)
-            if self.config.preserve_images or self.config.preserve_links:
-                images, links = self._extract_images_and_links(content_node)
-                if self.config.preserve_images:
-                    result.images = images
-                if self.config.preserve_links:
-                    result.links = links
 
         result.word_count = count_words(result.text)
         result.reading_time_ms = self._reading_time_ms(result.word_count)
 
-        if self.config.preserve_videos or self.config.preserve_audios:
+        if cfg.preserve_videos or cfg.preserve_audios:
             # The 1 MB raw-scan gate is a UTF-8 BYTE cap (Go len(),
             # extract.go:789-791). chars <= bytes always, so a doc over the
             # cap in characters is over it in bytes too; only docs that pass
@@ -300,14 +289,11 @@ class Extractor:
                 )
                 and has_media_reference(html_content)
             )
-            if self.config.preserve_videos and self.config.preserve_audios:
-                result.videos, result.audios = extract_videos_and_audios(
-                    doc, html_content, can_contain_media
-                )
-            elif self.config.preserve_videos:
-                result.videos = extract_videos(doc, html_content, can_contain_media)
-            else:
-                result.audios = extract_audios(doc, html_content, can_contain_media)
+            videos, audios = extract_videos_and_audios(doc, html_content, can_contain_media)
+            if cfg.preserve_videos:
+                result.videos = videos
+            if cfg.preserve_audios:
+                result.audios = audios
         return result
 
     def _extract_title(self, doc: Node) -> str:
@@ -388,9 +374,10 @@ class Extractor:
 
     # -- images / links ----------------------------------------------------
     def _extract_images_and_links(self, node: Node) -> tuple[list[dict], list[dict]]:
-        """Fused single walk for image + link extraction (same traversal,
-        same position semantics as the separate walks — pure perf fusion,
-        SURVEY.md §4.1 'single-traversal fusion')."""
+        """Port of extractImagesWithPosition + extractLinksWithPosition
+        (extract.go:1044-1137) as one walk (SURVEY.md §4.1 'single-traversal
+        fusion'). Each position is the 1-based ordinal of ALL <img> (resp.
+        <a>) encountered — invalid ones consume a position but are dropped."""
         images: list[dict] = []
         links: list[dict] = []
         img_pos = 0
@@ -414,24 +401,6 @@ class Extractor:
 
         walk_nodes(node, visit)
         return images, links
-
-    def _extract_images_with_position(self, node: Node) -> list[dict]:
-        """extract.go:1044-1089. Position is the 1-based ordinal of ALL <img>
-        encountered — invalid images consume a position but are dropped."""
-        images = []
-        position = 0
-
-        def visit(n: Node) -> bool:
-            nonlocal position
-            if n.type == ELEMENT and n.data == "img":
-                position += 1
-                img = self._parse_image_node(n, position)
-                if img is not None:
-                    images.append(img)
-            return True
-
-        walk_nodes(node, visit)
-        return images
 
     @staticmethod
     def _parse_image_node(n: Node, position: int) -> dict | None:
@@ -461,23 +430,6 @@ class Extractor:
             return None
         img["is_decorative"] = img["alt"] == ""
         return img
-
-    def _extract_links_with_position(self, node: Node) -> list[dict]:
-        """extract.go:1091-1137."""
-        links = []
-        position = 0
-
-        def visit(n: Node) -> bool:
-            nonlocal position
-            if n.type == ELEMENT and n.data == "a":
-                position += 1
-                link = self._parse_link_node(n, position)
-                if link is not None:
-                    links.append(link)
-            return True
-
-        walk_nodes(node, visit)
-        return links
 
     @staticmethod
     def _parse_link_node(n: Node, position: int) -> dict | None:

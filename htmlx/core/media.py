@@ -302,65 +302,17 @@ def _parse_audio_node(n: Node) -> dict:
     return audio
 
 
-def extract_videos(node: Node, html_content: str, can_contain_media: bool) -> list[dict]:
-    """Port of extractVideos (media.go:26-93)."""
-    videos: list[dict] = []
-    seen: set[str] = set()
-
-    def add_unique_urls(urls):
-        for url in urls:
-            if is_valid_url(url) and is_video_url(url) and url not in seen:
-                seen.add(url)
-                videos.append(_video_info(url=url, type_=detect_video_type(url)))
-
-    if can_contain_media:
-        add_unique_urls(extract_tag_attributes(html_content, "iframe", "src"))
-        add_unique_urls(extract_tag_attributes(html_content, "embed", "src", "data"))
-        add_unique_urls(extract_tag_attributes(html_content, "object", "data"))
-
-    def visit(n: Node) -> bool:
-        if n.type != ELEMENT:
-            return True
-        if n.data == "video":
-            v = _parse_video_node(n)
-            if v["url"] and v["url"] not in seen:
-                seen.add(v["url"])
-                videos.append(v)
-        elif n.data == "iframe":
-            v = _parse_iframe_node(n)
-            if v["url"] and v["url"] not in seen:
-                seen.add(v["url"])
-                videos.append(v)
-        elif n.data in ("embed", "object"):
-            v = _parse_embed_node(n)
-            if v["url"] and v["url"] not in seen:
-                seen.add(v["url"])
-                videos.append(v)
-        return True
-
-    walk_nodes(node, visit)
-
-    if can_contain_media:
-        count = 0
-        for m in VIDEO_REGEX.finditer(html_content):
-            count += 1
-            if count > MAX_REGEX_MATCHES:  # config.go:54 (output-affecting cap)
-                break
-            url = m.group(0)
-            if is_valid_url(url) and url not in seen:
-                seen.add(url)
-                videos.append(_video_info(url=url, type_=detect_video_type(url)))
-    return videos
-
-
 def extract_videos_and_audios(
     node: Node, html_content: str, can_contain_media: bool
 ) -> tuple[list[dict], list[dict]]:
-    """Fused single-walk variant of extract_videos + extract_audios for the
-    both-enabled config (the default): one full-document traversal instead
-    of two. Identical results — same traversal order, same 50k-node cap
-    over the same node sequence, separate dedup sets, and the raw-scan /
-    regex passes unchanged."""
+    """Port of extractVideos (media.go:26-93) and extractAudios
+    (media.go:164-196) as one document walk (SURVEY.md §4.1
+    'single-traversal fusion'). Each list keeps its reference order and
+    first-seen dedup by URL: videos are the raw iframe/embed/object
+    attribute scan, then <video>/<iframe>/<embed>/<object> in the walk,
+    then VIDEO_REGEX; audios are <audio> in the walk, then AUDIO_REGEX.
+    The walk's 50k-node cap binds on the same node sequence as each
+    reference walk. Callers keep the list their config preserves."""
     videos: list[dict] = []
     audios: list[dict] = []
     vseen: set[str] = set()
@@ -425,31 +377,3 @@ def extract_videos_and_audios(
                 aseen.add(url)
                 audios.append(_audio_info(url=url, type_=detect_audio_type(url)))
     return videos, audios
-
-
-def extract_audios(node: Node, html_content: str, can_contain_media: bool) -> list[dict]:
-    """Port of extractAudios (media.go:164-196)."""
-    audios: list[dict] = []
-    seen: set[str] = set()
-
-    def visit(n: Node) -> bool:
-        if n.type == ELEMENT and n.data == "audio":
-            a = _parse_audio_node(n)
-            if a["url"] and a["url"] not in seen:
-                seen.add(a["url"])
-                audios.append(a)
-        return True
-
-    walk_nodes(node, visit)
-
-    if can_contain_media:
-        count = 0
-        for m in AUDIO_REGEX.finditer(html_content):
-            count += 1
-            if count > MAX_REGEX_MATCHES:
-                break
-            url = m.group(0)
-            if is_valid_url(url) and url not in seen:
-                seen.add(url)
-                audios.append(_audio_info(url=url, type_=detect_audio_type(url)))
-    return audios

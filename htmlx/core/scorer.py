@@ -401,10 +401,6 @@ def _has_a_ancestor(node: Node) -> bool:
     return False
 
 
-def _has_a_ancestor_or_self_chain(node: Node) -> bool:  # pragma: no cover
-    return _has_a_ancestor(node)
-
-
 def _score_from_counts(
     scorer: "DefaultScorer", node: Node, tag_count: int, paragraph_count: int,
     heading_count: int, text_length: int, link_text_length: int,

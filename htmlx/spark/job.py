@@ -166,21 +166,6 @@ def derive_audit(results: DataFrame) -> DataFrame:
     )
 
 
-def run_audit(
-    df: DataFrame,
-    config: Config | None = None,
-    run_id: str = "",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Audit-event stage: one output row per blocked tag/attr/URL.
-
-    Standalone convenience — extracts once with audit collection on and
-    flattens. When you also need results/metrics, use run_extraction_full
-    (shares the single extraction pass across all three outputs)."""
-    results = run_extraction(df, config, run_id, num_partitions, with_audit=True)
-    return derive_audit(results)
-
-
 def dedup_pages_by_content(df: DataFrame) -> DataFrame:
     """Content-hash dedup BEFORE extraction — the Spark-idiomatic
     replacement for the reference's result cache (SURVEY.md §4.1): at
@@ -253,20 +238,6 @@ def run_extraction(
     return projected.mapInPandas(
         make_extract_batch(config, run_id, doc_counter), RESULT_SCHEMA
     )
-
-
-def run_metrics(
-    df: DataFrame,
-    config: Config | None = None,
-    run_id: str = "",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Per-partition metrics stage (lineage rows).
-
-    Standalone convenience — one extraction pass + JVM rollup. When you
-    also need results/audit, use run_extraction_full."""
-    results = run_extraction(df, config, run_id, num_partitions, with_audit=True)
-    return derive_metrics(results)
 
 
 def run_extraction_full(
