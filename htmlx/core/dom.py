@@ -170,6 +170,10 @@ class _TreeBuilder(HTMLParser):
         self.body_started = False
         self.head_explicit_open = False
         self.stack: list[Node] = []  # open user elements (below html/head/body)
+        # text node -> its pieces still to be joined: coalescing by `+=`
+        # on a node attribute copies the whole run per piece (quadratic
+        # on runs of stray '<'); finish() joins each run once
+        self.runs: dict[Node, list[str]] = {}
 
     # -- structure helpers -------------------------------------------------
     def _ensure_html(self, attrs=None):
@@ -336,7 +340,7 @@ class _TreeBuilder(HTMLParser):
                 tp = table.parent
                 prev = table.prev_sibling
                 if prev is not None and prev.type == TEXT:
-                    prev.data += data
+                    self._coalesce(prev, data)
                 else:
                     tn = Node(TEXT, data)
                     tp.insert_before(tn, table)
@@ -355,9 +359,25 @@ class _TreeBuilder(HTMLParser):
 
         last = parent.last_child
         if last is not None and last.type == TEXT:
-            last.data += data
+            self._coalesce(last, data)
         else:
             parent.append_child(Node(TEXT, data))
+
+    def _coalesce(self, node: Node, data: str) -> None:
+        run = self.runs.get(node)
+        if run is None:
+            self.runs[node] = [node.data, data]
+        else:
+            run.append(data)
+
+    def finish(self) -> Node:
+        """Join the buffered text runs, ensure the implied <body>, and
+        return the document node."""
+        for node, run in self.runs.items():
+            node.data = "".join(run)
+        self.runs.clear()
+        self._ensure_body()
+        return self.doc
 
     def handle_comment(self, data):
         if self.stack:
@@ -553,8 +573,7 @@ def parse(html_text: str) -> Node:
             # html.parser is tolerant; any residual error means grossly
             # invalid markup — keep whatever tree was built.
             pass
-    tb._ensure_body()
-    return tb.doc
+    return tb.finish()
 
 
 def parse_stdlib(html_text: str) -> Node:
@@ -565,8 +584,7 @@ def parse_stdlib(html_text: str) -> Node:
         tb.close()
     except Exception:
         pass
-    tb._ensure_body()
-    return tb.doc
+    return tb.finish()
 
 
 # ---------------------------------------------------------------------------

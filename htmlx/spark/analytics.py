@@ -18,6 +18,8 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 
@@ -2396,9 +2398,7 @@ LANG_PROFILES = {
 }
 
 
-_LANG_PRED_SQL: str | None = None
-
-
+@functools.cache
 def _lang_pred_sql() -> str:
     """The full classifier ladder as ONE SQL expression string over a
     staged `__toks` column (r10): building it Column-by-Column cost
@@ -2408,34 +2408,31 @@ def _lang_pred_sql() -> str:
     contain no quotes/backslashes, so plain single-quoted literals are
     exact). Memoized: the ladder is a pure function of the constant
     tables."""
-    global _LANG_PRED_SQL
-    if _LANG_PRED_SQL is None:
-        scores = {
-            lang: (
-                "size(array_intersect(__toks, array("
-                + ", ".join(f"'{w}'" for w in words)
-                + ")))"
-            )
-            for lang, words in LANG_PROFILES.items()
-        }
-        m = "greatest(" + ", ".join(scores.values()) + ")"
-        latin = (
-            f"CASE WHEN {m} = 0 THEN 'und' "
-            + " ".join(
-                f"WHEN {scores[lang]} = {m} THEN '{lang}'"
-                for lang in sorted(LANG_PROFILES)
-            )
-            + " ELSE 'und' END"
+    scores = {
+        lang: (
+            "size(array_intersect(__toks, array("
+            + ", ".join(f"'{w}'" for w in words)
+            + ")))"
         )
-        _LANG_PRED_SQL = (
-            "CASE WHEN text IS NULL OR text = '' THEN 'und' "
-            + " ".join(
-                f"WHEN substring(text, 1, 200) RLIKE '{pattern}' THEN '{lang}'"
-                for lang, pattern in LANG_SCRIPTS
-            )
-            + f" ELSE {latin} END"
+        for lang, words in LANG_PROFILES.items()
+    }
+    m = "greatest(" + ", ".join(scores.values()) + ")"
+    latin = (
+        f"CASE WHEN {m} = 0 THEN 'und' "
+        + " ".join(
+            f"WHEN {scores[lang]} = {m} THEN '{lang}'"
+            for lang in sorted(LANG_PROFILES)
         )
-    return _LANG_PRED_SQL
+        + " ELSE 'und' END"
+    )
+    return (
+        "CASE WHEN text IS NULL OR text = '' THEN 'und' "
+        + " ".join(
+            f"WHEN substring(text, 1, 200) RLIKE '{pattern}' THEN '{lang}'"
+            for lang, pattern in LANG_SCRIPTS
+        )
+        + f" ELSE {latin} END"
+    )
 
 
 def with_lang_pred(df: DataFrame, out_col: str = "pred_lang") -> DataFrame:
@@ -2552,7 +2549,7 @@ def near_dup_components(
     (e.g. a policy-variant tag) and every join/aggregate is additionally
     keyed by it. k variants' propagation rounds collapse from k
     blocking per-round count() actions to one chain over the k×-volume
-    keyed edge set (the corpus_filter_variants shape); convergence is
+    keyed edge set (the corpus_filter shape); convergence is
     reached when EVERY group's labels stop changing."""
     g = [group_col] if group_col else []
     labels = propagate_min_labels(
@@ -2718,6 +2715,121 @@ def propagate_min_labels(
         labels.count()
     sym.unpersist()
     return labels
+
+
+# ---------------------------------------------------------------------------
+# Composite corpus filter
+# ---------------------------------------------------------------------------
+
+#: previous invocation's persisted LSH pair set — evicted on the next
+#: call so repeated corpus_filter runs in one session cache O(1) frames
+_CF_PAIRS_CACHE = None
+
+
+def corpus_filter(
+    documents: DataFrame,
+    variants: dict,
+    threshold: float = 0.9,
+    min_chars: int = 100,
+    max_iters: int = 50,
+    until_converged: bool = True,
+) -> DataFrame:
+    """The composite training-corpus filter — the keep/drop decision a
+    data ingest consumes: every doc keeps or drops with a precedence-
+    ordered reason (exact_dup > near_dup > low_quality > und_lang).
+    `variants` maps name -> (hash_basis, max_bucket_size | None), and
+    every variant is decided in ONE pass. Returns (variant, doc_id,
+    reason, keep) with exactly one row per (variant, input doc) — a
+    null or empty text still gets its row.
+
+    threshold is the Jaccard verify cut, min_chars the low_quality
+    length gate, max_iters/until_converged the label-propagation budget
+    (see propagate_min_labels). The driver's corpus_filter row runs the
+    defaults with an md5/uncapped and an xxhash64/1024 variant;
+    jobs/curate.py --mode filter runs one variant with its CLI values.
+
+    Shared once across all variants: the base scan (which also carries
+    the lang-ID column and the exact-dup keeper — see below), the
+    Jaccard verification, and the label-propagation iteration chain
+    (variant-keyed via propagate_min_labels — one blocking count() per
+    round for ALL variants instead of one per variant per round).
+    Per-variant: the LSH candidate generation (basis-sharing inside
+    minhash_lsh_candidates_variants) and the final reason fan-out.
+
+    Plan shape (two corpus-wide exchanges: digest window + label join):
+    - exact-dup keeper = min(doc_id) window over the SAME text_md5 the
+      base row computes (exactly the oracle's own shape) — no
+      dedup_exact groupBy + corpus-wide join-back.
+    - lang-ID is a scan-side COLUMN of base (pure projection), not a
+      corpus-wide doc_id join.
+    - Jaccard verifies the VARIANT-TAGGED pairs directly
+      (ngram_jaccard_pairs carry_cols): a pair's jaccard does not depend
+      on the tag, and the expensive shingle-set joins are identical
+      either way, so no distinct() + tag-re-join round trip. Pairs
+      shared by k variants pay k (trivial) array_intersect evaluations
+      — bounded by the variant count, never the corpus.
+    - the converged labels join base ONCE on (variant, doc_id), left
+      join: docs with no verified edge keep their own id."""
+    global _CF_PAIRS_CACHE
+    # one scale-adaptive fan-out shared by every consumer below (base,
+    # both bases' signature scans, the shingle sets) — no-op at real
+    # scan widths
+    docs = spread_small_input(documents)
+    base = with_lang_pred(
+        docs.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
+    ).select(
+        "doc_id",
+        F.md5("text").alias("text_md5"),
+        F.length("text").alias("n_chars"),
+        "pred_lang",
+    ).withColumn(
+        "exact_keep", F.min("doc_id").over(Window.partitionBy("text_md5"))
+    )
+    # The VERIFIED pair set is referenced twice in the DAG (both union
+    # branches of the symmetric edge set inside propagate_min_labels);
+    # without a materialization both hash bases' signature scans and the
+    # Jaccard verification run twice when the components chain first
+    # executes. The verified table is tiny (near-dup pairs only), so
+    # persisting it is safe at any scale. The cache cannot be
+    # unpersisted inside this (lazy) builder, so accumulation across
+    # repeated invocations in one driver session (bench loops, sweeps)
+    # is bounded to ONE cached frame: each call evicts the previous
+    # call's set.
+    if _CF_PAIRS_CACHE is not None:
+        try:
+            _CF_PAIRS_CACHE.unpersist(blocking=False)
+        except Exception:
+            pass
+    pairs = minhash_lsh_candidates_variants(docs, variants)
+    verified = (
+        ngram_jaccard_pairs(docs, pairs, carry_cols=("variant",))
+        .where(F.col("jaccard") >= threshold)
+        .select("variant", "doc_a", "doc_b")
+        .persist()
+    )
+    _CF_PAIRS_CACHE = verified
+    labels = propagate_min_labels(
+        verified, ["variant"], max_iters=max_iters, until_converged=until_converged
+    )
+    base_v = base.select(
+        F.explode(F.array(*[F.lit(v) for v in variants])).alias("variant"), "*"
+    )
+    # no broadcast hints: every side here is corpus-sized at scale (the
+    # label table is bounded by near-dup endpoints but still grows with
+    # the corpus) — shuffle joins on uniform keys (md5 / doc_id)
+    joined = base_v.join(labels, ["variant", "doc_id"], "left").withColumn(
+        "near_dup", F.col("doc_id") != F.coalesce("label", "doc_id")
+    )
+    reason = (
+        F.when(F.col("doc_id") != F.col("exact_keep"), F.lit("exact_dup"))
+        .when(F.col("near_dup"), F.lit("near_dup"))
+        .when(F.col("n_chars") < min_chars, F.lit("low_quality"))
+        .when(F.col("pred_lang") == "und", F.lit("und_lang"))
+        .otherwise(F.lit(""))
+    )
+    return joined.select(
+        "variant", "doc_id", reason.alias("reason")
+    ).withColumn("keep", (F.col("reason") == "").cast("boolean"))
 
 
 # BPE-ish pre-tokenizer (GPT-2-style, restricted to the regex subset Java

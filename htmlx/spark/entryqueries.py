@@ -10,6 +10,7 @@ symbolically. Column names and types are aligned on both sides (BIGINT/long).
 
 from __future__ import annotations
 
+import functools
 import gzip
 import os
 from typing import Iterator
@@ -2040,9 +2041,8 @@ def _tiny_dct_jpeg(d: int) -> bytes:
 
 _ENC_IV = bytes(range(16))  # deterministic IV: byte-stable synthesized corpus
 
-_PDF_ENC_TIERS = None
 
-
+@functools.cache
 def _pdf_enc_tiers():
     """Deterministic empty-user-password encryption contexts for the
     synthesized PDF corpora — (PdfEncryption, encrypt_obj_bytes,
@@ -2050,9 +2050,6 @@ def _pdf_enc_tiers():
     authenticates. The expensive file-key/O/U derivations (Algorithm 2 /
     2.A) run ONCE per Python worker and are cached; per-document work is
     only the per-object key MD5 + the stream cipher itself."""
-    global _PDF_ENC_TIERS
-    if _PDF_ENC_TIERS is not None:
-        return _PDF_ENC_TIERS
     from .pdfcrypt import (
         PdfEncryption,
         derive_legacy_file_key,
@@ -2095,7 +2092,7 @@ def _pdf_enc_tiers():
     # real-password variant: content genuinely RC4-encrypted, but /U can
     # never authenticate the empty password -> whole-row error='encrypted'
     bad_dict = rc4_dict.replace(hx(u3), hx(b"\xaa" * 32))
-    _PDF_ENC_TIERS = {
+    return {
         "idhex": hx(id0),
         "tiers": [
             (PdfEncryption(3, 2, k3, "rc4", ok=True), rc4_dict, True),
@@ -2104,7 +2101,6 @@ def _pdf_enc_tiers():
         ],
         "bad": (PdfEncryption(3, 2, k3, "rc4", ok=True), bad_dict, True),
     }
-    return _PDF_ENC_TIERS
 
 
 def _enc_tail(entry, num: int = 5) -> bytes:
@@ -2752,170 +2748,6 @@ FROM documents
 """
 
 
-def corpus_filter_frame(docs, hash_basis: str, max_bucket_size):
-    """The composite training-corpus filter plan over a documents frame.
-    The DRIVER query runs it in oracle configuration (md5 basis, uncapped
-    buckets — exact, DuckDB-replicable); production runs ship xxhash64 +
-    capped buckets (see jobs/curate.py and the corpus_filter_production
-    bench row).
-
-    r10 shape (guide §2.4 — remove shuffles outright): the exact-dup
-    keeper is a min-window over the SAME md5 digest the base row already
-    computes (one digest shuffle; the former dedup_exact groupBy +
-    join-back paid the digest shuffle AND a corpus-wide join), lang-ID is
-    a scan-side COLUMN of base (it is a pure projection — the former
-    doc_id join shuffled the corpus once more for it), and the converged
-    component labels join in once (edge endpoints only). Two corpus-wide
-    exchanges total (digest window + label join) instead of five."""
-    from pyspark.sql import Window
-
-    docs = analytics.spread_small_input(docs)
-    base = analytics.with_lang_pred(docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "text",
-    )).select(
-        "doc_id",
-        F.md5("text").alias("text_md5"),
-        F.length("text").alias("n_chars"),
-        "pred_lang",
-    ).withColumn(
-        "exact_keep", F.min("doc_id").over(Window.partitionBy("text_md5"))
-    )
-    cands = analytics.minhash_lsh_candidates(
-        docs, max_bucket_size=max_bucket_size, hash_basis=hash_basis
-    )
-    verified = (
-        analytics.ngram_jaccard_pairs(docs, cands)
-        .where(F.col("jaccard") >= 0.9)
-        .select("doc_a", "doc_b")
-    )
-    labels = analytics.propagate_min_labels(
-        verified, [], max_iters=50, until_converged=True
-    )
-    # no broadcast hints: every side here is corpus-sized at scale (the
-    # label table is bounded by near-dup endpoints but still grows with
-    # the corpus) — shuffle joins on uniform doc_id keys, right at 100 TB
-    joined = base.join(
-        labels.withColumnRenamed("doc_id", "__ldoc"),
-        F.col("doc_id") == F.col("__ldoc"),
-        "left",
-    ).withColumn(
-        "near_dup", F.col("doc_id") != F.coalesce("label", "doc_id")
-    )
-    reason = (
-        F.when(F.col("doc_id") != F.col("exact_keep"), F.lit("exact_dup"))
-        .when(F.col("near_dup"), F.lit("near_dup"))
-        .when(F.col("n_chars") < 100, F.lit("low_quality"))
-        .when(F.col("pred_lang") == "und", F.lit("und_lang"))
-        .otherwise(F.lit(""))
-    )
-    return joined.select(
-        "doc_id", reason.alias("reason")
-    ).withColumn("keep", (F.col("reason") == "").cast("boolean"))
-
-
-#: previous invocation's persisted LSH pair set — evicted on the next
-#: call so repeated corpus_filter runs in one session cache O(1) frames
-_CF_PAIRS_CACHE = None
-
-
-def corpus_filter_variants_frame(docs, variants: dict):
-    """The composite training-corpus filter under SEVERAL (hash_basis,
-    max_bucket_size) policies in ONE pass — the dedup_spans_variants
-    pattern applied to the heaviest bench pair (r7 VERDICT item 3: the
-    separate corpus_filter + corpus_filter_production queries recomputed
-    the full exact-dedup/lang-ID/verify/components subplan twice).
-
-    Shared once across all variants: the base scan (which since r10 also
-    carries the lang-ID column and the exact-dup keeper — see below), the
-    Jaccard verification, and the label-propagation iteration chain
-    (variant-keyed via propagate_min_labels — one blocking count() per
-    round for ALL variants instead of one per variant per round).
-    Per-variant: the LSH candidate generation (basis-sharing inside
-    minhash_lsh_candidates_variants) and the final reason fan-out.
-    Returns (variant, doc_id, reason, keep).
-
-    r10 restructure (guide §2.4 — remove shuffles outright; measured and
-    oracle-pinned equivalent):
-    - exact-dup keeper = min(doc_id) window over the SAME text_md5 the
-      base row computes (exactly the oracle's own shape) — the former
-      dedup_exact groupBy + corpus-wide join-back collapses into the one
-      digest exchange.
-    - lang-ID is a scan-side COLUMN of base (pure projection), not a
-      corpus-wide doc_id join.
-    - Jaccard verifies the VARIANT-TAGGED pairs directly
-      (ngram_jaccard_pairs carry_cols): a pair's jaccard does not depend
-      on the tag, and the expensive shingle-set joins are identical
-      either way, so the former distinct() + tag-re-join round trip is
-      gone. Pairs shared by k variants pay k (trivial) array_intersect
-      evaluations instead — bounded by the variant count, never the
-      corpus.
-    - the converged labels join base ONCE on (variant, doc_id); the old
-      comp chain re-scanned docs for the variant fan-out and joined
-      twice."""
-    from pyspark.sql import Window
-
-    # one scale-adaptive fan-out shared by every consumer below (base,
-    # both bases' signature scans, the shingle sets) — no-op at real
-    # scan widths
-    docs = analytics.spread_small_input(docs)
-    base = analytics.with_lang_pred(
-        docs.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
-    ).select(
-        "doc_id",
-        F.md5("text").alias("text_md5"),
-        F.length("text").alias("n_chars"),
-        "pred_lang",
-    ).withColumn(
-        "exact_keep", F.min("doc_id").over(Window.partitionBy("text_md5"))
-    )
-    # The VERIFIED pair set is referenced twice in the DAG (both union
-    # branches of the symmetric edge set inside propagate_min_labels);
-    # without a materialization both hash bases' signature scans and the
-    # Jaccard verification run twice when the components chain first
-    # executes. The verified table is tiny (near-dup pairs only), so
-    # persisting it is safe at any scale. The cache cannot be
-    # unpersisted inside this (lazy) builder, so accumulation across
-    # repeated invocations in one driver session (bench loops, sweeps)
-    # is bounded to ONE cached frame: each call evicts the previous
-    # call's set (r8 advice — the leak was unbounded before).
-    global _CF_PAIRS_CACHE
-    if _CF_PAIRS_CACHE is not None:
-        try:
-            _CF_PAIRS_CACHE.unpersist(blocking=False)
-        except Exception:
-            pass
-    pairs = analytics.minhash_lsh_candidates_variants(docs, variants)
-    verified = (
-        analytics.ngram_jaccard_pairs(docs, pairs, carry_cols=("variant",))
-        .where(F.col("jaccard") >= 0.9)
-        .select("variant", "doc_a", "doc_b")
-        .persist()
-    )
-    _CF_PAIRS_CACHE = verified
-    labels = analytics.propagate_min_labels(
-        verified, ["variant"], max_iters=50, until_converged=True
-    )
-    base_v = base.select(
-        F.explode(F.array(*[F.lit(v) for v in variants])).alias("variant"), "*"
-    )
-    # no broadcast hints: every side here is corpus-sized at scale (see
-    # corpus_filter_frame) — shuffle joins on uniform keys (md5 / doc_id)
-    joined = base_v.join(labels, ["variant", "doc_id"], "left").withColumn(
-        "near_dup", F.col("doc_id") != F.coalesce("label", "doc_id")
-    )
-    reason = (
-        F.when(F.col("doc_id") != F.col("exact_keep"), F.lit("exact_dup"))
-        .when(F.col("near_dup"), F.lit("near_dup"))
-        .when(F.col("n_chars") < 100, F.lit("low_quality"))
-        .when(F.col("pred_lang") == "und", F.lit("und_lang"))
-        .otherwise(F.lit(""))
-    )
-    return joined.select(
-        "variant", "doc_id", reason.alias("reason")
-    ).withColumn("keep", (F.col("reason") == "").cast("boolean"))
-
-
 def q_corpus_filter(spark, sf_dir):
     """The composite training-corpus filter — the end-to-end decision a
     100 TB data pipeline actually ships: every doc keeps or drops with a
@@ -2937,7 +2769,7 @@ def q_corpus_filter(spark, sf_dir):
     cannot bind below 1025 near-identical docs (lsh_bucket_stats row
     reports dropped_buckets=0 on this corpus). A real basis/cap
     divergence would flip the production rows' hash."""
-    return corpus_filter_variants_frame(
+    return analytics.corpus_filter(
         _docs(spark, sf_dir),
         {"oracle": ("md5", None), "production": ("xxhash64", 1024)},
     )

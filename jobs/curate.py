@@ -11,6 +11,12 @@ Modes:
   filter      full keep/drop decision per document with a precedence-
               ordered reason column (exact_dup > near_dup > low_quality >
               und_lang) — what a training-data ingest actually consumes.
+              Runs analytics.corpus_filter (the operator the driver's
+              corpus_filter row checks against DuckDB) with one variant,
+              (--hash-basis, bucket cap 1024); --threshold, --min-chars
+              and --iters pass through. Emits (doc_id, reason, keep),
+              exactly one row per input document — null or empty text
+              included.
   dedup       near-dup keep-list only (LSH -> exact-Jaccard verify ->
               connected components).
   components  same as dedup but expects a precomputed pairs table at
@@ -159,10 +165,53 @@ import os
 import sys
 
 
-PIPELINE_STAGES = (
-    "urlfilter", "quality", "exact_dedup", "near_dedup", "decontaminate",
-    "tempsample", "split", "pack",
-)
+def _components_kw(args) -> dict:
+    """Label-propagation budget from --iters (0 = iterate to convergence)."""
+    return {"max_iters": args.iters or 50, "until_converged": args.iters == 0}
+
+
+def _near_dup_keep(docs, args):
+    """The near-dup keep-list: LSH candidates -> exact-Jaccard verify at
+    --threshold -> connected components (doc_id, keep_doc_id, is_dup).
+    The LSH and Jaccard operators are looked up on the analytics module
+    at call time (the traced benchmark wraps them by name)."""
+    from pyspark.sql import functions as F
+
+    from htmlx.spark import analytics
+
+    cands = analytics.minhash_lsh_candidates(docs, hash_basis=args.hash_basis)
+    pairs = (
+        analytics.ngram_jaccard_pairs(docs, cands)
+        .where(F.col("jaccard") >= args.threshold)
+        .select("doc_a", "doc_b")
+    )
+    return analytics.near_dup_components(docs, pairs, **_components_kw(args))
+
+
+def _blocklist(spark, path):
+    """The --blocklist host table: one host per line, blank lines and
+    '#' comments skipped; empty when no path is given."""
+    from pyspark.sql import functions as F
+
+    if not path:
+        return spark.createDataFrame([], "host string")
+    return (
+        spark.read.text(path)
+        .select(F.trim("value").alias("host"))
+        .where((F.col("host") != "") & ~F.col("host").startswith("#"))
+    )
+
+
+def _with_text_override(df, override):
+    """Replace `text` by an annotation stage's cleaned_text where the
+    thin (doc_id, cleaned_text) override has a row."""
+    from pyspark.sql import functions as F
+
+    return (
+        df.join(override, "doc_id", "left")
+        .withColumn("text", F.coalesce("cleaned_text", "text"))
+        .drop("cleaned_text")
+    )
 
 
 def _bpe_token_counts(spark, docs, args):
@@ -312,17 +361,9 @@ def run_pipeline(spark, docs, args) -> dict:
     # URL filtering runs next (still no text scan) when the corpus
     # carries a url column — the cheapest drops a crawl pipeline makes.
     if "url" in docs.columns:
-        blpath = getattr(args, "blocklist", None)
 
         def url_keep():
-            if blpath:
-                bl = (
-                    spark.read.text(blpath)
-                    .select(F.trim("value").alias("host"))
-                    .where((F.col("host") != "") & ~F.col("host").startswith("#"))
-                )
-            else:
-                bl = spark.createDataFrame([], "host string")
+            bl = _blocklist(spark, getattr(args, "blocklist", None))
             return analytics.url_filter(cur, bl).where("keep").select("doc_id")
 
         keep, n_cur = stage("urlfilter", url_keep, n_cur)
@@ -351,16 +392,8 @@ def run_pipeline(spark, docs, args) -> dict:
 
         ov, n_cur = stage("hosttmpl", tmpl_build, n_cur, annotation=True)
         override = ov.select("doc_id", "cleaned_text")
-
-        def _apply_override(df):
-            return (
-                df.join(override, "doc_id", "left")
-                .withColumn("text", F.coalesce("cleaned_text", "text"))
-                .drop("cleaned_text")
-            )
-
-        base = _apply_override(base)
-        cur = _apply_override(cur)
+        base = _with_text_override(base, override)
+        cur = _with_text_override(cur, override)
         executed.append("hosttmpl")
 
     if args.quality_rule != "none":
@@ -386,22 +419,11 @@ def run_pipeline(spark, docs, args) -> dict:
     cur = survivors(keep)
     executed.append("exact_dedup")
 
-    def near_keep():
-        cands = analytics.minhash_lsh_candidates(cur, hash_basis=args.hash_basis)
-        pairs = (
-            analytics.ngram_jaccard_pairs(cur, cands)
-            .where(F.col("jaccard") >= args.threshold)
-            .select("doc_a", "doc_b")
-        )
-        kw = (
-            {"max_iters": 50, "until_converged": True}
-            if args.iters == 0
-            else {"max_iters": args.iters}
-        )
-        comp = analytics.near_dup_components(cur, pairs, **kw)
-        return comp.where(~F.col("is_dup")).select("doc_id")
-
-    keep, n_cur = stage("near_dedup", near_keep, n_cur)
+    keep, n_cur = stage(
+        "near_dedup",
+        lambda: _near_dup_keep(cur, args).where(~F.col("is_dup")).select("doc_id"),
+        n_cur,
+    )
     cur = survivors(keep)
     executed.append("near_dedup")
 
@@ -427,17 +449,9 @@ def run_pipeline(spark, docs, args) -> dict:
             )
 
         ov, n_cur = stage("spandedup", span_build, n_cur, annotation=True)
-        span_override = ov.select("doc_id", "cleaned_text")
-
-        def _apply_span(df):
-            return (
-                df.join(span_override, "doc_id", "left")
-                .withColumn("text", F.coalesce("cleaned_text", "text"))
-                .drop("cleaned_text")
-            )
-
-        base = _apply_span(base)
-        cur = _apply_span(cur)
+        override = ov.select("doc_id", "cleaned_text")
+        base = _with_text_override(base, override)
+        cur = _with_text_override(cur, override)
         executed.append("spandedup")
 
     if args.eval_input:
@@ -680,22 +694,6 @@ def main():
     spark = SparkSession.builder.appName("htmlx-curate").getOrCreate()
     docs = spark.read.parquet(args.input)
 
-    def keep_list(pairs):
-        kw = (
-            {"max_iters": 50, "until_converged": True}
-            if args.iters == 0
-            else {"max_iters": args.iters}
-        )
-        return analytics.near_dup_components(docs, pairs, **kw)
-
-    def verified_pairs():
-        cands = analytics.minhash_lsh_candidates(docs, hash_basis=args.hash_basis)
-        return (
-            analytics.ngram_jaccard_pairs(docs, cands)
-            .where(F.col("jaccard") >= args.threshold)
-            .select("doc_a", "doc_b")
-        )
-
     if args.mode == "pipeline":
         manifest = run_pipeline(spark, docs, args)
         done = ", ".join(
@@ -891,15 +889,7 @@ def main():
     elif args.mode == "linkgraph":
         out = analytics.link_graph(docs, cross_host_only=not args.intra_host)
     elif args.mode == "urlfilter":
-        if args.blocklist:
-            bl = (
-                spark.read.text(args.blocklist)
-                .select(F.trim("value").alias("host"))
-                .where((F.col("host") != "") & ~F.col("host").startswith("#"))
-            )
-        else:
-            bl = spark.createDataFrame([], "host string")
-        out = analytics.url_filter(docs, bl)
+        out = analytics.url_filter(docs, _blocklist(spark, args.blocklist))
     elif args.mode == "split":
         out = analytics.hash_split(docs)
     elif args.mode == "decontaminate":
@@ -932,35 +922,19 @@ def main():
                      "(merges.parquet + alphabet.parquet; see bpetrain)")
         out = analytics.bpe_encode_ids(docs, merges, alphabet)
     elif args.mode == "components":
-        pairs = spark.read.parquet(args.pairs)
-        out = keep_list(pairs)
+        out = analytics.near_dup_components(
+            docs, spark.read.parquet(args.pairs), **_components_kw(args)
+        )
     elif args.mode == "dedup":
-        out = keep_list(verified_pairs())
+        out = _near_dup_keep(docs, args)
     else:
-        base = docs.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.md5("text").alias("text_md5"),
-            F.length("text").alias("n_chars"),
-        )
-        exact = analytics.dedup_exact(docs).select(
-            "text_md5", F.col("keep_doc_id").alias("exact_keep")
-        )
-        comp = keep_list(verified_pairs()).select(
-            "doc_id", F.col("is_dup").alias("near_dup")
-        )
-        lang = analytics.lang_id_docs(docs)
-        # corpus-sized sides on uniform keys: shuffle joins, no broadcasts
-        joined = base.join(exact, "text_md5").join(comp, "doc_id").join(lang, "doc_id")
-        reason = (
-            F.when(F.col("doc_id") != F.col("exact_keep"), F.lit("exact_dup"))
-            .when(F.col("near_dup"), F.lit("near_dup"))
-            .when(F.col("n_chars") < args.min_chars, F.lit("low_quality"))
-            .when(F.col("pred_lang") == "und", F.lit("und_lang"))
-            .otherwise(F.lit(""))
-        )
-        out = joined.select("doc_id", reason.alias("reason")).withColumn(
-            "keep", (F.col("reason") == "").cast("boolean")
-        )
+        out = analytics.corpus_filter(
+            docs,
+            {"production": (args.hash_basis, 1024)},
+            threshold=args.threshold,
+            min_chars=args.min_chars,
+            **_components_kw(args),
+        ).drop("variant")
 
     out.write.mode("overwrite").parquet(args.output)
     print(f"mode={args.mode} rows={spark.read.parquet(args.output).count()} -> {args.output}")

@@ -90,27 +90,21 @@ def test_group_col_runs_independent_problems_in_one_chain(spark):
 
 
 def test_corpus_filter_variants_matches_separate_frames(spark):
-    """The merged corpus_filter variants row must agree per-variant with
-    the single-config corpus_filter_frame it replaced (r7 VERDICT item 3
-    — one shared subplan instead of two full recomputations)."""
-    from htmlx.spark.entryqueries import (
-        corpus_filter_frame,
-        corpus_filter_variants_frame,
-    )
+    """The merged two-variant corpus_filter pass must agree per variant
+    with one-variant calls of the same operator (one shared subplan
+    instead of two full recomputations changes no decision)."""
+    from htmlx.spark.analytics import corpus_filter
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    merged = corpus_filter_variants_frame(
-        docs, {"oracle": ("md5", None), "production": ("xxhash64", 1024)}
-    )
+    policies = {"oracle": ("md5", None), "production": ("xxhash64", 1024)}
+    merged = corpus_filter(docs, policies)
     got = {
         (r.variant, r.doc_id): (r.reason, r.keep) for r in merged.collect()
     }
-    for v, (basis, cap) in (
-        ("oracle", ("md5", None)),
-        ("production", ("xxhash64", 1024)),
-    ):
+    for v, policy in policies.items():
         want = {
             r.doc_id: (r.reason, r.keep)
-            for r in corpus_filter_frame(docs, basis, cap).collect()
+            for r in corpus_filter(docs, {v: policy}).collect()
         }
         assert {d: got[(v, d)] for d in want} == want, v
+    assert len(got) == 2 * len(want)

@@ -428,3 +428,68 @@ def test_pipeline_wet_ab_report_row_in_audit(spark, tmp_path):
     assert audit["pack"]["note"] is None
     rep = spark.read.parquet(str(tmp_path / "out" / "wet_ab_report.parquet")).collect()
     assert len(rep) == 1 and rep[0]["n_urls"] == 5
+
+
+def _run_filter_cli(monkeypatch, inp, out, *flags):
+    import sys
+
+    from jobs.curate import main
+
+    monkeypatch.setattr(sys, "argv", [
+        "curate.py", "--input", inp, "--output", out, *flags,
+    ])
+    main()
+
+
+def test_filter_cli_one_row_per_doc_with_null_and_empty_text(spark, tmp_path, monkeypatch):
+    """--mode filter (the CLI default) decides EVERY input document: null
+    and empty texts degrade to a dropped row, never to a missing one."""
+    long_en = "the cat and the dog is in the house " * 5
+    rows = [
+        (1, long_en), (2, long_en), (3, long_en + "again"),
+        (4, None), (5, None), (6, ""),
+        (7, "short but fine"), (8, "xyz " * 40), (9, long_en + "more words"),
+    ]
+    inp, out = str(tmp_path / "in.parquet"), str(tmp_path / "out")
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(inp)
+    _run_filter_cli(monkeypatch, inp, out, "--mode", "filter")
+    got = spark.read.parquet(out)
+    assert got.columns == ["doc_id", "reason", "keep"]
+    res = {r.doc_id: (r.reason, r.keep) for r in got.collect()}
+    assert got.count() == len(rows)
+    assert sorted(res) == [r[0] for r in rows]
+    for d in (4, 5, 6):
+        assert res[d][1] is False, (d, res[d])
+    assert res[2] == ("exact_dup", False)
+    assert res[7] == ("low_quality", False)
+
+
+def test_filter_cli_matches_corpus_filter_operator(spark, tmp_path, monkeypatch):
+    """--mode filter is analytics.corpus_filter with the single variant
+    (--hash-basis, 1024); --threshold, --min-chars and --iters reach the
+    operator as threshold, min_chars and the label-propagation budget."""
+    from htmlx.spark.analytics import corpus_filter
+
+    inp = "/root/testdata/sf0.001/documents.parquet"
+    docs = spark.read.parquet(inp)
+
+    def rows(df):
+        return sorted((r.doc_id, r.reason, r.keep) for r in df.collect())
+
+    out = str(tmp_path / "default")
+    _run_filter_cli(monkeypatch, inp, out)
+    want = corpus_filter(docs, {"production": ("xxhash64", 1024)})
+    assert rows(spark.read.parquet(out)) == rows(want)
+
+    out = str(tmp_path / "flags")
+    _run_filter_cli(
+        monkeypatch, inp, out, "--mode", "filter", "--hash-basis", "md5",
+        "--threshold", "0.5", "--min-chars", "400", "--iters", "1",
+    )
+    want_flags = corpus_filter(
+        docs, {"production": ("md5", 1024)}, threshold=0.5, min_chars=400,
+        max_iters=1, until_converged=False,
+    )
+    got = rows(spark.read.parquet(out))
+    assert got == rows(want_flags)
+    assert got != rows(want)  # the flags changed decisions

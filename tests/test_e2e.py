@@ -238,3 +238,16 @@ def test_ledger_wrapped_names_resolve():
         assert callable(getattr(mod, name, None)), name
     for name in ledger.CORE_METHODS:
         assert callable(getattr(mod.Extractor, name, None)), name
+    # and the Spark-side names it patches for traced runs: the curate
+    # near-dup operators (looked up on the module at call time) and the
+    # ParquetTableIO write/commit methods
+    from htmlx.spark import analytics, io
+
+    with open(path) as f:
+        src = f.read()
+    for name in ("minhash_lsh_candidates", "ngram_jaccard_pairs"):
+        assert f'keep("{name}")' in src, name
+        assert callable(getattr(analytics, name, None)), name
+    for name in ("append_groups", "_commit_groups"):
+        assert f"io.ParquetTableIO.{name} = " in src, name
+        assert callable(getattr(io.ParquetTableIO, name, None)), name

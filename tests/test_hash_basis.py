@@ -105,8 +105,8 @@ def test_driver_queries_use_md5_basis_and_production_defaults_xxhash64():
     src = inspect.getsource(entryqueries)
     # every basis-taking analytics call in the driver module passes md5
     # (a `hash_basis=hash_basis` pass-through is allowed for parametrized
-    # builders like corpus_filter_frame — their DRIVER callers are the
-    # q_ wrappers, which must pass the literal "md5")
+    # builders — their DRIVER callers are the q_ wrappers, which must
+    # pass the literal "md5")
     for call in re.finditer(r"analytics\.(\w+)\(", src):
         if call.group(1) in {f.__name__ for f in basis_fns}:
             # find the matching close paren naively: scan the call's args

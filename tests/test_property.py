@@ -1,6 +1,7 @@
 """Property tests (hypothesis): no exception on arbitrary bytes, determinism
 across runs — the engine analogue of fuzz_test.go:13-138."""
 
+import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from htmlx.core.extract import Extractor, extract
@@ -106,3 +107,53 @@ def test_fast_tokenizer_matches_stdlib(parts):
 
     doc = "".join(parts)
     assert _tree_sig(parse(doc)) == _tree_sig(parse_stdlib(doc))
+
+
+def _best_parse_times(blocks, runs=5):
+    """Best-of-`runs` wall time to parse each block of documents back to
+    back. The blocks' runs interleave, so a slow host phase hits every
+    block alike, and the cyclic GC is off while timing (as in timeit)."""
+    import gc
+    import time
+
+    from htmlx.core.dom import parse
+
+    best = [float("inf")] * len(blocks)
+    gc_was_on = gc.isenabled()
+    gc.disable()
+    try:
+        for _ in range(runs):
+            for i, block in enumerate(blocks):
+                t0 = time.perf_counter()
+                for doc in block:
+                    parse(doc)
+                best[i] = min(best[i], time.perf_counter() - t0)
+    finally:
+        if gc_was_on:
+            gc.enable()
+    return best
+
+
+@pytest.mark.parametrize("prefix, unit", [("<p>", "< "), ("<table>", "< a")])
+def test_parse_linear_in_stray_lt_runs(prefix, unit):
+    """Every '<' that starts no markup reaches the tree builder as its own
+    text piece; the pieces of one run must coalesce in linear time, on
+    the body path and on the table foster-parent path. 4x the input may
+    cost at most ~5x the time (best of 5 runs per size). The small input
+    is timed as four back-to-back parses so both timed regions last about
+    as long and are equally exposed to host preemption."""
+    from htmlx.core.dom import ELEMENT, TEXT, parse
+
+    small = prefix + unit * (50_000 // len(unit))
+    big = prefix + unit * (200_000 // len(unit))
+    t_small4, t_big = _best_parse_times([[small] * 4, [big]])
+    assert t_big <= 5 * t_small4 / 4, (prefix, t_small4 / 4, t_big)
+    # the run is ONE text node holding the whole run: the only child of
+    # the <p>, or foster-parented just before the <table>
+    el = parse(big).first_child.last_child.first_child
+    run = el.first_child if prefix == "<p>" else el
+    tail = None if prefix == "<p>" else el.next_sibling
+    assert run.type == TEXT and run.next_sibling is tail
+    assert run.data == unit * (200_000 // len(unit))
+    if tail is not None:
+        assert tail.type == ELEMENT and tail.data == "table"
